@@ -30,18 +30,18 @@ object Main {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .getOrCreate()
-
-    val lines = spark.readStream
-      .format("twitch-irc")
-      .option("channel", channel)
-      .option("nick", nick)
-      .option("pass", pass)
-      .load()
+    // one shuffle partition per core unless set by the user: with the
+    // default 200, every trigger of the small running-count shuffles
+    // schedules 200 near-empty tasks
+    if (!spark.conf.getAll.contains("spark.sql.shuffle.partitions"))
+      spark.conf.set("spark.sql.shuffle.partitions",
+        spark.sparkContext.defaultParallelism.toLong)
 
     val cfg = StreamingPipeline.Config(
       channel = channel.stripPrefix("#"),
       language = language,
       batchInterval = s"$batchSeconds seconds")
+    val lines = StreamingPipeline.readTwitchIrc(spark, cfg, nick = nick, pass = pass)
     val (wc, cc) = StreamingPipeline.start(
       lines, cfg, TextClassifier.default, new ParquetKVSink(outDir), ckptDir)
 

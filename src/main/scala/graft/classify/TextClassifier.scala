@@ -53,7 +53,7 @@ final case class KeywordClassifier(
   override val labels: IndexedSeq[String] = labelKeywords.map(_._1).toIndexedSeq
 
   override def scores(text: String): Seq[Double] = {
-    val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSet
+    val toks = TextClassifier.Whitespace.split(text.toLowerCase).filter(_.nonEmpty).toSet
     labelKeywords.map { case (_, kws) =>
       if (kws.isEmpty) 0.0 else kws.count(toks.contains).toDouble / kws.size
     }
@@ -61,6 +61,9 @@ final case class KeywordClassifier(
 }
 
 object TextClassifier {
+
+  /** Compiled once: `String.split("\\s+")` compiles the regex per call. */
+  private[classify] val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
   /** The classifier as a column function (scalar UDF — the classifier is
     * arbitrary Scala by design; everything around it stays native).

@@ -35,15 +35,6 @@ object TextFunctions {
   def tokens(text: Column): Column =
     filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
-  /** Remove stop-words, preserving multiplicity and order (unlike
-    * `array_except`, which dedups — wordcount semantics need the
-    * multiset).
-    */
-  def removeStopWords(toks: Column, language: String): Column = {
-    val sw = typedlit(stopWords(language))
-    filter(toks, t => !array_contains(sw, t))
-  }
-
   /** Token count (whitespace tokenization). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -302,22 +293,15 @@ object TextFunctions {
     c => f(c)
   }
 
-  /** JVM body of [[cleanTokensUdf]] / `CleanTokensExpr`.
-    * Code points, not UTF-16 units: the columnar twin's
-    * `length(w) > minLength` (and the DuckDB oracle) count characters,
-    * so supplementary-plane tokens (emoji, rare CJK) must gate the same.
+  /** JVM body of `CleanTokensExpr`: tokens minus stop-words, longer
+    * than `minLength` — multiplicity and order preserved (unlike
+    * `array_except`, which dedups). Code points, not UTF-16 units:
+    * Spark's `length(w) > minLength` (and the DuckDB oracle) count
+    * characters, so supplementary-plane tokens (emoji, rare CJK) must
+    * gate the same.
     */
   def cleanTokensLocal(text: String, minLength: Int, sw: Set[String]): Array[String] =
     tokensLocal(text).filter(t => t.codePointCount(0, t.length) > minLength && !sw.contains(t))
-
-  /** `text → tokens minus stop-words, length > minLength` as one tight
-    * loop (wordcount's scan-side pass; multiplicity and order preserved).
-    */
-  def cleanTokensUdf(language: String, minLength: Int): Column => Column = {
-    val sw = stopWords(language).toSet
-    val f = udf { (text: String) => cleanTokensLocal(text, minLength, sw) }
-    c => f(c)
-  }
 
   /** JVM body of [[distinctTokensUdf]] / `DistinctTokensExpr`:
     * first-occurrence order, matching `array_distinct`.

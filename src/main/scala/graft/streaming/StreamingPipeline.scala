@@ -43,7 +43,8 @@ object StreamingPipeline {
       maxBufferedLines: Long = 0L)
 
   /** `twitch-irc` line stream with the Config's admission-control options
-    * applied — the standard way to build the topology's source.
+    * applied — the standard way to build the topology's source. Joins
+    * `#channel` whether or not `cfg.channel` carries the `#`.
     */
   def readTwitchIrc(
       spark: org.apache.spark.sql.SparkSession,
@@ -56,7 +57,7 @@ object StreamingPipeline {
       .format("twitch-irc")
       .option("host", host)
       .option("port", port.toString)
-      .option("channel", cfg.channel)
+      .option("channel", "#" + cfg.channel.stripPrefix("#"))
       .option("nick", nick)
       .option("pass", pass)
       .option("maxLinesPerTrigger", cfg.maxLinesPerTrigger.toString)
@@ -67,15 +68,17 @@ object StreamingPipeline {
   /** Raw `value` lines → parsed message frame (columnar, codegen). */
   def parse(lines: DataFrame): DataFrame = IrcParser.parse(lines)
 
-  /** Streaming running word counts (A3+A4): explode clean tokens, filter
-    * short words, unbounded `groupBy.count`. Catalyst plans partial +
-    * final hash aggregation into the state store — the map-side combine
-    * the reference hand-wrote with `reduceByKey` (`SparkRunner.scala:126`).
+  /** Streaming running word counts (A3+A4): explode the tokens of the
+    * batch tokenizer (`WordCount.cleanTokens`, native `clean_tokens`,
+    * stop-words and the `minWordLength` gate applied before the explode),
+    * unbounded `groupBy.count`. Catalyst plans partial + final hash
+    * aggregation into the state store — the map-side combine the
+    * reference hand-wrote with `reduceByKey` (`SparkRunner.scala:126`).
     */
   def wordCounts(messages: DataFrame, cfg: Config): DataFrame =
     messages
-      .select(explode(WordCount.cleanTokens(col("text"), cfg.language)).alias("word"))
-      .filter(length(col("word")) > cfg.minWordLength)
+      .select(explode(WordCount.cleanTokens(col("text"), cfg.language, cfg.minWordLength))
+        .alias("word"))
       .groupBy("word")
       .count()
 

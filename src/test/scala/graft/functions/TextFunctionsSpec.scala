@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.SparkTestBase
+import graft.operators.WordCount
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TextFunctionsSpec extends SparkTestBase {
@@ -15,13 +17,21 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(evalTokens("   ") == Seq.empty)
   }
 
-  test("removeStopWords keeps multiplicity and order") {
-    val got = Seq("the cat the cat sat")
-      .toDF("t")
-      .select(TextFunctions.removeStopWords(TextFunctions.tokens(col("t")), "english"))
-      .as[Seq[String]]
-      .head()
-    assert(got == Seq("cat", "cat", "sat"))
+  /** Spark-builtin reference for `clean_tokens`: lower, split on
+    * whitespace runs, drop empties, stop-words and tokens of at most
+    * `minLength` characters.
+    */
+  private def builtinCleanTokens(t: Column, minLength: Int): Column = {
+    val sw = typedlit(TextFunctions.stopWords("english"))
+    filter(split(lower(t), "\\s+"), w => length(w) > minLength && !array_contains(sw, w))
+  }
+
+  test("clean_tokens keeps multiplicity and order") {
+    val df = Seq("the cat the cat sat", "The\tCAT  sat the").toDF("t")
+    val got = df.select(WordCount.cleanTokens(col("t"), "english"))
+      .as[Seq[String]].collect().toSeq
+    assert(got == Seq(Seq("cat", "cat", "sat"), Seq("cat", "sat")))
+    assert(got == df.select(builtinCleanTokens(col("t"), 0)).as[Seq[String]].collect().toSeq)
   }
 
   test("shingles: n-grams, and short docs shingle to the full join") {
@@ -227,18 +237,15 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(fps(a).intersect(fps("uno dos tres cuatro cinco seis siete ocho")).isEmpty)
   }
 
-  test("cleanTokensUdf / distinctTokensUdf twin their columnar forms") {
+  test("clean_tokens / distinctTokensUdf match their columnar forms") {
     val texts = Seq(
       "The quick brown fox jumps over the lazy dog again and again",
       "a the an of short toks only", "  ", "Repeat repeat REPEAT word word")
     val df = texts.toDF("t")
-    val colClean = df.select(
-      filter(
-        TextFunctions.removeStopWords(TextFunctions.tokens(col("t")), "english"),
-        w => length(w) > 3)).as[Seq[String]].collect().toSeq
-    val udfClean = df.select(TextFunctions.cleanTokensUdf("english", 3)(col("t")))
+    val colClean = df.select(builtinCleanTokens(col("t"), 3)).as[Seq[String]].collect().toSeq
+    val nativeClean = df.select(WordCount.cleanTokens(col("t"), "english", 3))
       .as[Seq[String]].collect().toSeq
-    assert(udfClean == colClean)
+    assert(nativeClean == colClean)
 
     val outliers = Seq("the", "word")
     val colDistinct = df.select(

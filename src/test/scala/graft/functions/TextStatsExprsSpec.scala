@@ -123,7 +123,7 @@ class TextStatsExprsSpec extends SparkTestBase {
     assert(nativeSide(8L) == ((None, Seq.empty[String], Seq.empty[Long], 0.0)), nativeSide(8L))
   }
 
-  test("round-9 operator-path exprs match their UDF twins: clean-tokens/simhash/label-clean") {
+  test("round-9 exprs match twins: clean-tokens/simhash/label-clean") {
     import graft.functions.expressions.{CleanTextFastExpr, CleanTokensExpr, SimHash60Expr}
     val extra = rows.union(Seq(
       (10L, "[bracketed] content < br / > next 'line' and  the    spaced   words here"),
@@ -137,15 +137,22 @@ class TextStatsExprsSpec extends SparkTestBase {
       CleanTextFastExpr.cleanTextFast(col("text")).as("lc"))
       .as[(Long, Seq[String], Long, Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    // clean_tokens against Spark builtins (null text → empty array, as
+    // coalesced here); simhash / label-clean against their UDF twins
+    val sw = typedlit(TextFunctions.stopWords("english"))
+    val builtinClean = coalesce(
+      filter(split(lower(col("text")), "\\s+"),
+        w => length(w) > 3 && !array_contains(sw, w)),
+      typedlit(Seq.empty[String]))
     val udfSide = extra.select(
       col("id"),
-      TextFunctions.cleanTokensUdf("english", 3)(col("text")).as("ct"),
+      builtinClean.as("ct"),
       TextFunctions.simHashUdf(col("text")).as("sh"),
       graft.operators.LabelPrep.cleanTextFastUdf(col("text")).as("lc"))
       .as[(Long, Seq[String], Long, Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(nativeSide == udfSide)
-    // null text: empty tokens / simhash 0 / null string — the UDF twins' results
+    // null text: empty tokens / simhash 0 / null string
     assert(nativeSide(8L) == ((Seq.empty[String], 0L, None)), nativeSide(8L))
 
     // TokensExpr equals the columnar HOF tokenizer row-for-row (null →

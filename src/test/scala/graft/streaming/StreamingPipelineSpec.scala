@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.classify.{KeywordClassifier, Predictions}
+import graft.functions.expressions.CleanTokensExpr
 import graft.sinks.InMemoryKVSink
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ScalaUDF}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -49,7 +51,48 @@ class StreamingPipelineSpec extends SparkTestBase {
       line("u3", "test", "strong hello"))
     assert(totals == Map("hello" -> 3L, "world" -> 3L, "strong" -> 4L))
 
+    // the word branch's EXECUTED micro-batch plan tokenizes with the
+    // native clean_tokens kernel — no interpreted HOF filter, no ScalaUDF
+    val exec = org.apache.spark.sql.graftbridge.Bridge.lastExecutedPlan(query)
+    val exprs = exec.collect { case node => node.expressions }.flatten.flatMap(_.collect {
+      case e @ (_: CleanTokensExpr | _: ArrayFilter | _: ScalaUDF) => e.getClass.getSimpleName
+    })
+    assert(exprs.contains("CleanTokensExpr") && !exprs.exists(_ != "CleanTokensExpr"),
+      exec.toString)
     query.stop()
+  }
+
+  test("streaming word counts equal the batch wordcount: case, whitespace, stop-words, code-point length") {
+    val input = MemoryStream[String](spark)
+    val sink = new InMemoryKVSink
+    val cfg = StreamingPipeline.Config(channel = "par")
+    val ckpt = Files.createTempDirectory("graft-ckpt-parity").toString
+    val fire = "\uD83D\uDD25" // one code point, two UTF-16 units
+    val lines = Seq(
+      line("u1", "par", "Hello HELLO hello World"), // upper case
+      line("u2", "par", "spark\tstreaming   spark\t\tdata"), // tabs, space runs
+      line("u3", "par", "this that with from the and"), // stop-words only
+      line("u4", "par", "cat cats"), // 3 letters dropped, 4 kept
+      line("u5", "par", s"${fire * 2} ${fire * 4}"), // 2 code points dropped, 4 kept
+      line("u6", "par", "")) // empty message body
+    val expected = Map(
+      "hello" -> 3L, "world" -> 1L, "spark" -> 2L, "streaming" -> 1L, "data" -> 1L,
+      "cats" -> 1L, fire * 4 -> 1L)
+
+    val query = StreamingPipeline.startSnapshotQuery(
+      StreamingPipeline.wordCounts(StreamingPipeline.parse(input.toDF()), cfg),
+      sink, "par_wordcount", 0, ckpt, Trigger.ProcessingTime("100 milliseconds"))
+    input.addData(lines: _*)
+    query.processAllAvailable()
+    val streamed = sink.snapshot("par_wordcount").map(r => r.getString(0) -> r.getLong(1)).toMap
+    query.stop()
+    assert(streamed == expected)
+
+    val batch = graft.operators.WordCount
+      .wordCounts(StreamingPipeline.parse(lines.toDF("value")), "text", cfg.language,
+        cfg.minWordLength)
+      .as[(String, Long)].collect().toMap
+    assert(batch == expected)
   }
 
   test("checkpoint restart recovers running-count state (ST7)") {

@@ -42,14 +42,11 @@ class TwitchIrcSourceSpec extends SparkTestBase {
     serverThread.start()
 
     val ckpt = Files.createTempDirectory("graft-irc-src").toString
-    val stream = spark.readStream
-      .format("twitch-irc")
-      .option("host", "127.0.0.1")
-      .option("port", server.getLocalPort.toString)
-      .option("channel", "#chan")
-      .option("nick", "nick")
-      .option("pass", "oauth:test")
-      .load()
+    // built the way graft.Main builds it: the channel without its '#'
+    // still JOINs #chan
+    val stream = StreamingPipeline.readTwitchIrc(
+      spark, StreamingPipeline.Config(channel = "chan"),
+      host = "127.0.0.1", port = server.getLocalPort, nick = "nick", pass = "oauth:test")
 
     val query = stream.writeStream
       .format("memory")
